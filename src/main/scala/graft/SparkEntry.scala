@@ -174,7 +174,7 @@ object SparkEntry {
     * pass's results are fully materialized — a released
     * locally-checkpointed RDD cannot recompute.
     */
-  def releaseCheckpointBlocks(): Unit =
+  private[graft] def releaseCheckpointBlocks(): Unit =
     SparkSession.getActiveSession
       .orElse(SparkSession.getDefaultSession)
       .foreach { s =>

@@ -4,7 +4,7 @@ import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -55,7 +55,9 @@ final class PipelineRunner(
   val metrics = new PipelineMetrics
 
   /** Process one (micro-)batch of changelog rows end-to-end:
-    * classify → compact → delete → upsert → commit. Returns docs written.
+    * classify → compact → applyChanges → commit. The compaction is the
+    * batch's only per-key fold: its one row per key (`_op` "u" upsert /
+    * "d" delete) is the sink's delta. Returns upserts + deletes.
     */
   def processBatch(batch: DataFrame, opCol: String, keyCol: String,
       orderCols: Seq[Column], validity: Option[Column] = None): Long = {
@@ -66,29 +68,21 @@ final class PipelineRunner(
     }
     poison.filter(_ => dlq.nonEmpty).foreach { p => dlq.get(p) }
 
-    val compacted = Changelog.compact(
-      Changelog.classify(good, opCol), keyCol, orderCols).cache()
-    try {
-      // deletes stay distributed (sink-side anti-join) — a bulk purge
-      // micro-batch must never materialize its key set on the driver
-      val deletes = compacted.filter(col("_action") === "delete")
-        .select(col(keyCol).cast("string"))
-      val upserts = compacted.filter(col("_action") === "upsert")
-        .drop("_action", opCol)
-        .withColumn(sink.idField, col(keyCol).cast("string"))
-      // one job for both counts (over the cached compact), not two
-      val counts = compacted.groupBy("_action").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val nDeletes = counts.getOrElse("delete", 0L)
-      val nUpserts = counts.getOrElse("upsert", 0L)
-      withRetry {
-        if (nDeletes > 0) sink.deleteByKeys(deletes)
-        if (nUpserts > 0) sink.addDocuments(upserts)
-        sink.commit()
-      }
-      metrics.record(nUpserts + nDeletes, System.nanoTime() - t0)
-      nUpserts + nDeletes
-    } finally compacted.unpersist()
+    val changes = Changelog.compact(Changelog.classify(good, opCol), keyCol, orderCols)
+      .withColumn("_action", when(col("_action") === "delete", "d").otherwise("u"))
+      .drop(opCol)
+      .withColumnRenamed("_action", IndexSink.OpCol)
+      .withColumn(sink.idField, col(keyCol).cast("string"))
+    val docs = withRetry {
+      // the count rides on the sink's own write; an Observation collects
+      // only once, so every attempt gets a fresh one
+      val folded = Observation()
+      sink.applyChanges(changes.observe(folded, count(lit(1)).as("n")))
+      sink.commit()
+      folded.get("n").asInstanceOf[Long]
+    }
+    metrics.record(docs, System.nanoTime() - t0)
+    docs
   }
 
   /** Post-batch retention maintenance from the pipeline's OWN process —

@@ -2,9 +2,9 @@ package graft.sink
 
 import org.apache.hadoop.fs.{Path => HPath}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 
 import graft.cdc.Changelog
 
@@ -60,11 +60,27 @@ trait IndexSink {
       .collect().map(r => String.valueOf(r.get(0))).toSeq)
   }
 
+  /** Stage a changelog already folded to ONE row per key: [[idField]],
+    * `_op` ∈ {u, d} and the doc columns. With one row per key the delete
+    * set and the upsert set are disjoint, so this default split is
+    * correct for any sink. [[commit]] must evaluate the frame.
+    */
+  def applyChanges(changes: DataFrame): Unit = {
+    val live = col(IndexSink.OpCol) === "u"
+    deleteByKeys(changes.filter(!live).select(idField))
+    addDocuments(changes.filter(live).drop(IndexSink.OpCol))
+  }
+
   /** Make all preceding adds/deletes durable + visible. */
   def commit(): Unit
 
   /** Current committed view of the index. */
   def searchable(): DataFrame
+}
+
+object IndexSink {
+  /** Op column of folded changes and delta files: "u" upsert, "d" delete. */
+  val OpCol = "_op"
 }
 
 /** Driver-side keyed store for tests: a plain map guarded by a lock.
@@ -111,9 +127,10 @@ final class InMemoryIndexSink(spark: SparkSession, schema: org.apache.spark.sql.
   * this is the merge-on-read replacement):
   *   - The FIRST load (no committed base, no deltas) writes the batch as
   *     the bucketed base directly — a bulk load IS its own compaction.
-  *   - Every later commit folds its pending ops (in call order) to one row
-  *     per key and appends that as a flat delta dir: **O(batch) bytes and
-  *     files, regardless of index size**. No base file is read or written.
+  *   - Every later commit appends its pending ops, folded to one row per
+  *     key, as a flat delta dir: **O(batch) bytes and files, regardless of
+  *     index size**. No base file is read or written. A commit whose fold
+  *     is empty publishes no version.
   *   - [[compactDeltas]] (run automatically once the delta log exceeds
   *     `maxDeltas`, or invoked as a maintenance job) folds the delta log
   *     into the base: it reads ONLY the buckets the delta keys touch,
@@ -142,6 +159,7 @@ final class InMemoryIndexSink(spark: SparkSession, schema: org.apache.spark.sql.
 class ParquetIndexSink(spark: SparkSession, path: String, numBuckets: Int = 16,
     maxDeltas: Int = 8)
     extends IndexSink {
+  import IndexSink.OpCol
   import ParquetIndexSink._
 
   /** Pending operations in CALL ORDER — a delete issued after an upsert
@@ -151,8 +169,8 @@ class ParquetIndexSink(spark: SparkSession, path: String, numBuckets: Int = 16,
     */
   private sealed trait Op
   private case class Upsert(df: DataFrame) extends Op
-  private case class DeleteIds(ids: Seq[String]) extends Op
-  private case class DeleteKeys(ids: DataFrame) extends Op
+  private case class Delete(keys: DataFrame) extends Op
+  private case class Changes(df: DataFrame) extends Op
 
   private var ops: Vector[Op] = Vector.empty
   private var seq = 0L
@@ -249,73 +267,72 @@ class ParquetIndexSink(spark: SparkSession, path: String, numBuckets: Int = 16,
         s"lost commit race: manifest v${m.version} at $path was replaced by a concurrent committer")
   }
 
-  override def addDocuments(docs: DataFrame): Long = synchronized {
+  private def requireUnreserved(docs: DataFrame): Unit =
     Seq(BucketCol, OpCol, DeltaVerCol, SeqCol, OpSeqCol).foreach { c =>
-      require(!docs.columns.contains(c),
-        s"'$c' is a reserved column name in ParquetIndexSink")
+      require(!docs.columns.contains(c), s"'$c' is a reserved column name in ParquetIndexSink")
     }
+
+  override def addDocuments(docs: DataFrame): Long = synchronized {
+    requireUnreserved(docs)
     ops :+= Upsert(docs)
     seq += 1; seq
   }
-  override def deleteByIds(ids: Seq[String]): Unit = synchronized {
-    ops :+= DeleteIds(ids)
+  override def applyChanges(changes: DataFrame): Unit = synchronized {
+    requireUnreserved(changes.drop(OpCol))
+    ops :+= Changes(changes)
   }
+  override def deleteByIds(ids: Seq[String]): Unit =
+    deleteByKeys(spark.createDataset(ids)(Encoders.STRING).toDF(idField))
   override def deleteByKeys(ids: DataFrame): Unit = synchronized {
-    ops :+= DeleteKeys(ids)
+    ops :+= Delete(ids)
   }
 
-  /** Fold the pending ops (in call order) to ONE row per key, aligned to
-    * the committed schema `s`, with `_op` = "u" (upsert, doc columns live)
-    * or "d" (delete tombstone, doc columns null). The per-key resolution
-    * shuffles only the batch. A NULL `_id` in an upsert is a hard error
-    * raised executor-side BEFORE any file lands (the reference requires
-    * the `_id` primary key; silently hashing null would strand the row in
-    * a `__HIVE_DEFAULT_PARTITION__` dir and fail the commit late with a
-    * parse error). NULL delete keys delete nothing and are dropped.
+  /** Fold the pending ops to ONE delta row per key. A lone [[applyChanges]]
+    * frame is folded already; any other op list goes through one per-key
+    * window ordered by (op call order, row order inside the op): the LAST
+    * op wins, so an add-then-delete key dies and a delete-then-add key
+    * lives. The window shuffles only the batch.
     */
-  private def foldOpsToDelta(s: StructType): DataFrame = {
+  private def foldOpsToDelta(s: StructType): DataFrame = ops match {
+    case Vector(Changes(df)) => asDelta(df, s)
+    case _ =>
+      val staged = ops.zipWithIndex.map { case (op, i) =>
+        asDelta(asChanges(op), s).withColumn(OpSeqCol, lit(i))
+          .withColumn(SeqCol, monotonically_increasing_id())
+      }
+      Changelog.compact(staged.reduce(_.unionByName(_)), idField,
+        Seq(col(OpSeqCol), col(SeqCol))).drop(OpSeqCol, SeqCol)
+  }
+
+  /** A pending op as a changes frame: `_id`, `_op` and any doc columns. */
+  private def asChanges(op: Op): DataFrame = op match {
+    case Upsert(df) => df.withColumn(OpCol, lit("u"))
+    case Delete(keys) =>
+      keys.select(col(keys.columns.head).cast("string").as(idField), lit("d").as(OpCol))
+    case Changes(df) => df
+  }
+
+  /** A changes frame as delta rows of schema `s` + `_op`: absent and
+    * tombstone doc columns null, NULL delete keys dropped. A NULL `_id`
+    * upsert is a hard error raised executor-side BEFORE any file lands
+    * (silently hashing null would strand the row in a
+    * `__HIVE_DEFAULT_PARTITION__` dir and fail the commit late).
+    */
+  private def asDelta(df: DataFrame, s: StructType): DataFrame = {
+    val live = col(OpCol) === "u"
     val nullIdMsg =
       s"ParquetIndexSink: upsert batch contains a NULL '$idField' — " +
         s"the index primary key is required on every document"
-    val frames = ops.zipWithIndex.map {
-      case (Upsert(df), i) =>
-        // align to the committed (merged) schema: absent columns null
-        val aligned = df.select(s.fields.toSeq.map { f =>
-          val c =
-            if (!df.columns.contains(f.name)) lit(null).cast(f.dataType)
-            else if (f.name == idField)
-              when(col(f.name).isNull,
-                raise_error(lit(nullIdMsg)).cast(f.dataType))
-                .otherwise(col(f.name))
-            else col(f.name)
-          c.as(f.name)
-        }: _*)
-        // last add per _id wins inside one upsert batch
-        Changelog.compact(
-            aligned.withColumn(SeqCol, monotonically_increasing_id()),
-            idField, Seq(col(SeqCol))).drop(SeqCol)
-          .withColumn(OpCol, lit("u")).withColumn(OpSeqCol, lit(i))
-      case (DeleteIds(ids), i) =>
-        import spark.implicits._
-        tombstones(ids.toDF(idField), s).withColumn(OpSeqCol, lit(i))
-      case (DeleteKeys(df), i) =>
-        tombstones(df.select(col(df.columns.head).cast("string").as(idField)), s)
-          .withColumn(OpSeqCol, lit(i))
-    }
-    // across ops, the LAST op per key wins (call order — an add-then-
-    // delete key must die, a delete-then-add key must live)
-    Changelog.compact(frames.reduce(_.unionByName(_)), idField,
-      Seq(col(OpSeqCol))).drop(OpSeqCol)
+    df.filter(col(idField).isNotNull || live).select(s.fields.toSeq.map { f =>
+      val c =
+        if (f.name == idField)
+          when(col(f.name).isNull, raise_error(lit(nullIdMsg)).cast(f.dataType))
+            .otherwise(col(f.name).cast(f.dataType))
+        else if (!df.columns.contains(f.name)) lit(null).cast(f.dataType)
+        else when(live, col(f.name))
+      c.as(f.name)
+    } :+ col(OpCol): _*)
   }
-
-  /** Delete tombstones: the key column + null doc columns + `_op` = "d". */
-  private def tombstones(keys: DataFrame, s: StructType): DataFrame =
-    keys.filter(col(idField).isNotNull).distinct()
-      .select(s.fields.toSeq.map { f =>
-        if (f.name == idField) col(idField).cast(f.dataType).as(f.name)
-        else lit(null).cast(f.dataType).as(f.name)
-      }: _*)
-      .withColumn(OpCol, lit("d"))
 
   override def commit(): Unit = synchronized {
     if (ops.isEmpty) return
@@ -331,8 +348,10 @@ class ParquetIndexSink(spark: SparkSession, path: String, numBuckets: Int = 16,
     // fills absent columns), new documents may omit old columns. A TYPE
     // change for an existing name is refused loudly.
     val schema: Option[StructType] =
-      (prev.flatMap(_.schema).toSeq ++ ops.collect { case Upsert(df) => df.schema })
-        .reduceOption(ParquetIndexSink.mergeSchemas)
+      (prev.flatMap(_.schema).toSeq ++ ops.collect {
+        case Upsert(df) => df.schema
+        case Changes(df) => StructType(df.schema.filterNot(_.name == OpCol))
+      }).reduceOption(ParquetIndexSink.mergeSchemas)
     val version = prev.map(_.version + 1).getOrElse(0L)
     val prevBuckets = prev.map(_.buckets).getOrElse(Map.empty[Int, String])
     val prevDeltas = prev.map(_.deltas).getOrElse(Nil)
@@ -344,36 +363,30 @@ class ParquetIndexSink(spark: SparkSession, path: String, numBuckets: Int = 16,
         writeManifest(Manifest(version, nb, None, prevBuckets, prevDeltas,
           kind = "empty"))
         ops = Vector.empty
-      case Some(s) if prevBuckets.isEmpty && prevDeltas.isEmpty =>
-        // initial load: the batch IS the index — write it straight as the
-        // bucketed base (a bulk load is its own compaction; routing it
-        // through the delta log would just re-write it on first compact).
-        // Shuffle by bucket first: without it, every task writes a file
-        // per bucket it happens to see (tasks × buckets tiny files —
-        // measured 4× slower at sf0.1); with it, each bucket is exactly
-        // one task writing one file (~1 GB at production sizing).
-        // The dir carries a per-attempt suffix so concurrent committers
-        // racing to the same version can never overwrite each other's
-        // data files — the loser's orphan dir is vacuum()ed.
-        val folded = foldOpsToDelta(s)
-        val live = folded.filter(col(OpCol) === "u").drop(OpCol)
-        val commitDir = s"data/c$version-${ParquetIndexSink.attemptId()}"
-        live.withColumn(BucketCol, bucketOf(col(idField), nb))
-          .repartition(col(BucketCol))
-          .write.mode("overwrite").partitionBy(BucketCol)
-          .parquet(s"$path/$commitDir")
-        writeManifest(Manifest(version, nb, Some(s),
-          listBucketDirs(commitDir), Nil, kind = "load"))
-        ops = Vector.empty
       case Some(s) =>
-        // steady state: append ONE flat delta dir — O(batch) bytes/files,
-        // no base file read or written, regardless of index size.
-        val deltaDir = s"delta/c$version-${ParquetIndexSink.attemptId()}"
-        foldOpsToDelta(s)
-          .withColumn(DeltaVerCol, lit(version))
-          .write.mode("overwrite").parquet(s"$path/$deltaDir")
-        writeManifest(Manifest(version, nb, Some(s),
-          prevBuckets, prevDeltas :+ deltaDir, kind = "delta"))
+        val rows = Observation() // the write's own row count
+        val folded = foldOpsToDelta(s).observe(rows, count(lit(1)).as("n"))
+        val load = prevBuckets.isEmpty && prevDeltas.isEmpty
+        // per-attempt dir suffix: concurrent committers racing to the same
+        // version never overwrite each other's files — the loser's orphan
+        // dir is vacuum()ed
+        val dir = s"${if (load) "data" else "delta"}/c$version-${attemptId()}"
+        if (load)
+          // initial load: the batch IS the index — write it straight as the
+          // bucketed base (a bulk load is its own compaction; routing it
+          // through the delta log would just re-write it on first compact).
+          writeBuckets(folded.filter(col(OpCol) === "u").drop(OpCol), nb, dir)
+        else
+          // steady state: append ONE flat delta dir — O(batch) bytes/files,
+          // no base file read or written, regardless of index size.
+          folded.withColumn(DeltaVerCol, lit(version))
+            .write.mode("overwrite").parquet(s"$path/$dir")
+        // an empty fold changes nothing: it publishes no version
+        val empty = rows.get("n") == 0L
+        if (empty) fs.delete(new HPath(path, dir), true)
+        else writeManifest(
+          if (load) Manifest(version, nb, Some(s), listBucketDirs(dir), Nil, kind = "load")
+          else Manifest(version, nb, Some(s), prevBuckets, prevDeltas :+ dir, kind = "delta"))
         ops = Vector.empty
         // bound read amplification: fold the log into the base once it
         // grows past maxDeltas commits (amortized maintenance, same unit
@@ -384,7 +397,7 @@ class ParquetIndexSink(spark: SparkSession, path: String, numBuckets: Int = 16,
         // growing the log without bound while the stream never advances.
         // Warn loudly and leave the log for the next commit / an explicit
         // compactDeltas() maintenance run to retry.
-        if (prevDeltas.size + 1 > maxDeltas) {
+        if (!empty && prevDeltas.size + 1 > maxDeltas) {
           try compactDeltas()
           catch {
             case scala.util.control.NonFatal(e) =>
@@ -420,22 +433,13 @@ class ParquetIndexSink(spark: SparkSession, path: String, numBuckets: Int = 16,
       val touched: Set[Int] = resolved
         .select(bucketOf(col(idField), nb).as("_b")).distinct()
         .collect().map(_.getInt(0)).toSet
-      val baseDirs = touched.toSeq.sorted.flatMap(prev.buckets.get)
-        .map(rel => s"$path/$rel")
-      val base =
-        if (baseDirs.isEmpty)
-          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-        else spark.read.schema(s).parquet(baseDirs: _*)
-      val merged = base
+      val merged = readDirs(s, touched.toSeq.sorted.flatMap(prev.buckets.get))
         .join(resolved.select(idField), Seq(idField), "left_anti")
         .unionByName(resolved.filter(col(OpCol) === "u")
           .select(s.fieldNames.toSeq.map(col): _*))
       val version = prev.version + 1
       val commitDir = s"data/c$version-${ParquetIndexSink.attemptId()}"
-      merged.withColumn(BucketCol, bucketOf(col(idField), nb))
-        .repartition(col(BucketCol))
-        .write.mode("overwrite").partitionBy(BucketCol)
-        .parquet(s"$path/$commitDir")
+      writeBuckets(merged, nb, commitDir)
       // a touched bucket with zero surviving docs writes no dir → it
       // drops out of the manifest entirely
       writeManifest(Manifest(version, nb, Some(s),
@@ -449,15 +453,30 @@ class ParquetIndexSink(spark: SparkSession, path: String, numBuckets: Int = 16,
     * `_dv` alone is a total order per key.
     */
   private def resolveDeltas(m: Manifest, s: StructType): DataFrame = {
-    val deltaSchema = StructType(s.fields.toSeq :+
-      StructField(OpCol, StringType) :+ StructField(DeltaVerCol, org.apache.spark.sql.types.LongType))
-    val deltas = spark.read.schema(deltaSchema)
-      .parquet(m.deltas.map(rel => s"$path/$rel"): _*)
-    Changelog.compact(deltas, idField, Seq(col(DeltaVerCol))).drop(DeltaVerCol)
+    Changelog.compact(readDirs(deltaSchema(s), m.deltas), idField,
+      Seq(col(DeltaVerCol))).drop(DeltaVerCol)
   }
+
+  /** Parquet dirs (relative to the index root) read with schema `s`. */
+  private def readDirs(s: StructType, dirs: Seq[String]): DataFrame =
+    if (dirs.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
+    else spark.read.schema(s).parquet(dirs.map(rel => s"$path/$rel"): _*)
+
+  /** Delta-file columns: the doc schema `s` + `_op` + `_dv`. */
+  private def deltaSchema(s: StructType): StructType =
+    StructType(s.fields.toSeq :+ StructField(OpCol, StringType) :+ StructField(DeltaVerCol, LongType))
 
   private def bucketOf(id: Column, nb: Int): Column =
     pmod(xxhash64(id.cast("string")), lit(nb.toLong)).cast("int")
+
+  /** Write `df` as the bucketed base dir `commitDir`. Shuffle by bucket
+    * first: without it, every task writes a file per bucket it happens to
+    * see (tasks × buckets tiny files — measured 4× slower at sf0.1); with
+    * it, each bucket is one task writing one file (~1 GB in production).
+    */
+  private def writeBuckets(df: DataFrame, nb: Int, commitDir: String): Unit =
+    df.withColumn(BucketCol, bucketOf(col(idField), nb)).repartition(col(BucketCol))
+      .write.mode("overwrite").partitionBy(BucketCol).parquet(s"$path/$commitDir")
 
   /** Bucket map of a freshly written `data/c{N}-{attempt}` dir. */
   private def listBucketDirs(commitDir: String): Map[Int, String] =
@@ -513,10 +532,7 @@ class ParquetIndexSink(spark: SparkSession, path: String, numBuckets: Int = 16,
       s"changesSince($version): manifest(s) v${missing.mkString(", v")} " +
         s"were vacuumed away — the feed reconstructs only back to " +
         s"v${history().headOption.getOrElse(-1L)}")
-    val outSchema = StructType(
-      latest.schema.getOrElse(StructType(Nil)).fields.toSeq :+
-        StructField(OpCol, StringType) :+
-        StructField(DeltaVerCol, org.apache.spark.sql.types.LongType))
+    val outSchema = deltaSchema(latest.schema.getOrElse(StructType(Nil)))
     // width evolution: align every commit's frame to the LATEST schema
     // (absent-then columns read as null, like the merge-on-read view)
     def align(df: DataFrame): DataFrame =
@@ -530,14 +546,9 @@ class ParquetIndexSink(spark: SparkSession, path: String, numBuckets: Int = 16,
         case "delta" =>
           val dir = m.deltas.lastOption.getOrElse(throw new IllegalStateException(
             s"delta manifest v$w lists no delta dir at $path"))
-          Some(align(spark.read.schema(
-              StructType(m.schema.get.fields.toSeq :+
-                StructField(OpCol, StringType) :+
-                StructField(DeltaVerCol, org.apache.spark.sql.types.LongType)))
-            .parquet(s"$path/$dir")))
+          Some(align(readDirs(deltaSchema(m.schema.get), Seq(dir))))
         case "load" if m.buckets.nonEmpty =>
-          Some(align(spark.read.schema(m.schema.get)
-            .parquet(m.buckets.toSeq.sortBy(_._1).map(rel => s"$path/${rel._2}"): _*)
+          Some(align(readDirs(m.schema.get, m.buckets.toSeq.sortBy(_._1).map(_._2))
             .withColumn(OpCol, lit("u"))
             .withColumn(DeltaVerCol, lit(w))))
         case "load" | "empty" | "compact" | "rebucket" => None
@@ -546,20 +557,12 @@ class ParquetIndexSink(spark: SparkSession, path: String, numBuckets: Int = 16,
             "(index written before commit kinds were recorded)")
       }
     }
-    if (frames.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema)
-    else frames.reduce(_.unionByName(_))
+    frames.reduceOption(_.unionByName(_)).getOrElse(readDirs(outSchema, Nil))
   }
 
   private def viewOf(m: Manifest): DataFrame = {
       val s = m.schema.getOrElse(StructType(Seq(StructField(idField, StringType))))
-      val base =
-        if (m.buckets.isEmpty)
-          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-        else
-          spark.read.schema(s)
-            .parquet(m.buckets.toSeq.sortBy(_._1).map(rel => s"$path/${rel._2}"): _*)
+      val base = readDirs(s, m.buckets.toSeq.sortBy(_._1).map(_._2))
       if (m.deltas.isEmpty) base
       else {
         // merge-on-read: base minus every delta-touched key, plus the
@@ -606,10 +609,7 @@ class ParquetIndexSink(spark: SparkSession, path: String, numBuckets: Int = 16,
       case Some(_) =>
         // searchable() folds the delta log in, so the rewrite doubles as a
         // compaction — the new manifest carries an empty delta log
-        searchable().withColumn(BucketCol, bucketOf(col(idField), newBuckets))
-          .repartition(col(BucketCol))
-          .write.mode("overwrite").partitionBy(BucketCol)
-          .parquet(s"$path/$commitDir")
+        writeBuckets(searchable(), newBuckets, commitDir)
         listBucketDirs(commitDir)
     }
     writeManifest(Manifest(version, newBuckets, prev.schema, written, Nil,
@@ -738,19 +738,14 @@ object ParquetIndexSink {
     */
   val BucketCol = "gbucket"
 
-  /** Delta-file op marker: "u" = upsert (doc columns live), "d" = delete
-    * tombstone (doc columns null). Reserved document column name.
-    */
-  val OpCol = "_op"
-
   /** Delta-file commit version — orders deltas per key at read time.
     * Reserved document column name.
     */
   val DeltaVerCol = "_dv"
 
-  /** Working column ordering rows WITHIN one upsert batch (last add per
-    * key wins). Never written to files, but a document column of the same
-    * name would be silently overwritten and dropped by the fold — reserved.
+  /** Working column ordering rows WITHIN one op (last row per key wins).
+    * Never written to files, but a document column of the same name would
+    * be silently overwritten and dropped by the fold — reserved.
     */
   val SeqCol = "_seq"
 

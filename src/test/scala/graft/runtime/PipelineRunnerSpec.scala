@@ -2,15 +2,26 @@ package graft.runtime
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.execution.{CommandResultExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+import org.scalatest.time.{Seconds, Span}
 
 import graft.SparkSpec
 import graft.config.PipelineConfig
 import graft.sink.ParquetIndexSink
 
-class PipelineRunnerSpec extends SparkSpec {
+class PipelineRunnerSpec extends SparkSpec with TimeLimits {
   import spark.implicits._
+
+  implicit val signaler: Signaler = ThreadSignaler
 
   private def cfg(dir: String) = PipelineConfig(
     indexName = "test-idx", sourcePath = dir,
@@ -20,18 +31,142 @@ class PipelineRunnerSpec extends SparkSpec {
   private def changelog(rows: (String, Long, String, String)*) =
     rows.toSeq.toDF("k", "seq", "op", "v")
 
+  /** One batch covering every per-key shape the fold must resolve: a hot
+    * key with three versions (h), delete-then-add (d), add-then-delete
+    * (c, e) and stray −U rows (b: ignored next to its +I; f: the key's
+    * only row). Folds to 4 upserts (a, b, d, h) + 2 deletes (c, e).
+    */
+  private val richBatch = Seq(
+    ("a", 1L, "+I", "v1"), ("b", 2L, "+I", "b1"), ("a", 3L, "+U", "v2"),
+    ("c", 4L, "+I", "c1"), ("c", 5L, "-D", ""),
+    ("h", 6L, "+I", "h1"), ("h", 7L, "+U", "h2"), ("h", 8L, "+U", "h3"),
+    ("d", 9L, "-D", ""), ("d", 10L, "+I", "d1"),
+    ("e", 11L, "+I", "e1"), ("e", 12L, "-D", ""),
+    ("b", 13L, "-U", "b0"), ("f", 14L, "-U", "f0"))
+
+  private def stateOf(sink: graft.sink.IndexSink): Seq[(String, String)] =
+    sink.searchable().orderBy("_id").select("_id", "v")
+      .as[(String, String)].collect().toSeq
+
   test("batch: classify → compact → delete → upsert → commit") {
     val dir = java.nio.file.Files.createTempDirectory("runner").toString
     val sink = new ParquetIndexSink(spark, dir)
     val runner = new PipelineRunner(cfg(dir), sink)
-    runner.processBatch(
-      changelog(("a", 1, "+I", "v1"), ("b", 2, "+I", "b1"), ("a", 3, "+U", "v2"),
-        ("c", 4, "+I", "c1"), ("c", 5, "-D", "")),
-      "op", "k", Seq(col("seq")))
-    val state = sink.searchable().orderBy("_id")
-      .select("_id", "v").as[(String, String)].collect().toSeq
-    assert(state == Seq(("a", "v2"), ("b", "b1")))
+    val docs = runner.processBatch(changelog(richBatch: _*), "op", "k", Seq(col("seq")))
+    assert(stateOf(sink) == Seq(("a", "v2"), ("b", "b1"), ("d", "d1"), ("h", "h3")))
+    assert(docs == 6) // upserts + deletes after compaction
+    assert(runner.metrics.totalDocs.get == 6)
     assert(runner.metrics.totalBatches.get == 1)
+  }
+
+  test("runner fold contract: empty folds, null keys, trait-default sink parity") {
+    val dir = java.nio.file.Files.createTempDirectory("runner-fold").toString
+    val sink = new ParquetIndexSink(spark, dir)
+    val runner = new PipelineRunner(cfg(dir), sink)
+    def run(rows: Seq[(String, Long, String, String)],
+        validity: Option[org.apache.spark.sql.Column] = None): Long =
+      failAfter(Span(120, Seconds)) {
+        runner.processBatch(changelog(rows: _*), "op", "k", Seq(col("seq")), validity)
+      }
+
+    // an empty fold returns 0 and publishes nothing, before and after a load
+    assert(run(Seq(("a", 1, "-U", "x"))) == 0)
+    assert(sink.history().isEmpty)
+    assert(run(richBatch) == 6)
+    val loaded = sink.history()
+    assert(run(Seq(("a", 20, "-U", "x"), ("b", 21, "-U", "y"))) == 0)
+    assert(run(Seq(("z", 22, "+I", "POISON")), Some(col("v") =!= "POISON")) == 0)
+    assert(sink.history() == loaded)
+
+    // a null-key −D deletes nothing; it still counts as a folded delete
+    assert(run(Seq((null, 23, "-D", ""), ("z", 24, "+I", "z1"))) == 2)
+    assert(stateOf(sink) ==
+      Seq(("a", "v2"), ("b", "b1"), ("d", "d1"), ("h", "h3"), ("z", "z1")))
+    val published = sink.history()
+    assert(published.size == loaded.size + 1)
+
+    // a null-key +I fails the batch before any manifest is published
+    intercept[Exception](run(Seq((null, 25, "+I", "n1"), ("y", 26, "+I", "y1"))))
+    assert(sink.history() == published)
+
+    // the trait's default applyChanges split (deleteByKeys + addDocuments)
+    // leaves the same index as the sink's pre-folded delta write
+    val schema = StructType(Seq(StructField("k", StringType),
+      StructField("seq", LongType), StructField("v", StringType),
+      StructField("_id", StringType)))
+    val mem = new graft.sink.InMemoryIndexSink(spark, schema)
+    val pq = new ParquetIndexSink(spark,
+      java.nio.file.Files.createTempDirectory("runner-parity").toString)
+    val memRunner = new PipelineRunner(cfg(dir), mem)
+    val pqRunner = new PipelineRunner(cfg(dir), pq)
+    Seq(richBatch,
+      Seq(("a", 30L, "-D", ""), ("c", 31L, "+I", "c2"), ("b", 32L, "+U", "b2"),
+        ("h", 33L, "-U", "h3"), ("e", 34L, "-D", ""), ("x", 35L, "-U", ""))
+    ).foreach { rows =>
+      val n = memRunner.processBatch(changelog(rows: _*), "op", "k", Seq(col("seq")))
+      assert(pqRunner.processBatch(changelog(rows: _*), "op", "k", Seq(col("seq"))) == n)
+      assert(stateOf(mem) == stateOf(pq))
+    }
+    assert(stateOf(pq) == Seq(("b", "b2"), ("c", "c2"), ("d", "d1"), ("h", "h3")))
+  }
+
+  /** Executed plans of the SQL executions `body` runs, in order. Listener
+    * events arrive asynchronously: a marker query run after `body` is the
+    * last event to wait for.
+    */
+  private def executedPlans(body: => Unit): Seq[SparkPlan] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).toDF("plan_marker").collect()
+      val deadline = System.currentTimeMillis() + 30000
+      def marked = seen.asScala.exists(_.output.exists(_.name == "plan_marker"))
+      while (!marked && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(marked, "marker query never reached the listener")
+      seen.asScala.toSeq.takeWhile(!_.output.exists(_.name == "plan_marker"))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** Every node of an executed plan, through AQE stages and commands. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case s: QueryStageExec => nodes(s.plan)
+    case c: CommandResultExec => nodes(c.commandPhysicalPlan)
+    case _ => p.children.flatMap(nodes)
+  })
+
+  private def windows(p: SparkPlan): Int = nodes(p).count(_.isInstanceOf[WindowExec])
+
+  test("plan shape: one per-key window per commit, no cache or count job") {
+    val dir = java.nio.file.Files.createTempDirectory("runner-plan").toString
+    val sink = new ParquetIndexSink(spark, dir)
+    val runner = new PipelineRunner(cfg(dir), sink)
+    runner.processBatch(changelog(richBatch: _*), "op", "k", Seq(col("seq")))
+
+    // a steady-state runner batch runs ONE execution: the delta write
+    val batch = executedPlans(runner.processBatch(
+      changelog(("a", 40, "+U", "v3"), ("a", 41, "+U", "v4"), ("b", 42, "-D", "")),
+      "op", "k", Seq(col("seq"))))
+    assert(batch.size == 1, batch.mkString("\n"))
+    assert(windows(batch.head) == 1, batch.head)
+    assert(!nodes(batch.head).exists(_.isInstanceOf[InMemoryTableScanExec]), batch.head)
+
+    // direct callers: add + delete in one commit fold through one window
+    val direct = executedPlans {
+      sink.addDocuments(changelog(("c", 50, "+I", "c5"), ("c", 51, "+I", "c6"))
+        .withColumn("_id", col("k")).drop("op"))
+      sink.deleteByIds(Seq("a", "c"))
+      sink.commit()
+    }
+    assert(direct.size == 1, direct.mkString("\n"))
+    assert(windows(direct.head) == 1, direct.head)
+    assert(stateOf(sink) == Seq(("d", "d1"), ("h", "h3")))
   }
 
   test("replayed batch is idempotent (at-least-once + upsert)") {
