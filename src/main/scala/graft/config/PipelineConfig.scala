@@ -43,9 +43,11 @@ final case class PipelineConfig(
     keepVersions: Int = 1,
     keepGenerations: Int = 1,
     // compaction amortization for the runner's owned stores: maintain()
-    // folds a store only when its pending commit-log depth EXCEEDS this
-    // (0 = fold whenever anything is pending; an empty log never folds —
-    // Stores.maybeCompact). Raise to trade read-side merge work for
+    // folds a geo/vector/signature/stats store only when its pending
+    // commit-log depth EXCEEDS this, and a postings store already when
+    // its depth REACHES it (or its touched-docs fraction trips) — 0 =
+    // fold whenever anything is pending; an empty log never folds
+    // (Stores.maybeCompact). Raise to trade read-side merge work for
     // fewer full base rewrites on high-frequency batch cadences.
     storeMaxDeltas: Int = 0) {
   require(indexName != null && indexName.nonEmpty, "indexName is required")

@@ -46,11 +46,7 @@ final class PipelineRunner(
       * would be FENCED by this pipeline's maintenance).
       */
     stores: Seq[(String, String)] = Nil) {
-  stores.foreach { case (kind, _) =>
-    require(graft.sink.Stores.Kinds.contains(kind),
-      s"unknown store kind '$kind' (expected one of " +
-        s"${graft.sink.Stores.Kinds.mkString(", ")})")
-  }
+  stores.foreach { case (kind, _) => graft.sink.Stores(kind) }
 
   val metrics = new PipelineMetrics
 

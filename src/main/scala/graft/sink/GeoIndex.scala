@@ -54,7 +54,9 @@ import graft.operators.GeoJoin
   * longitudes are stored bit-identical (the normalization term is
   * exactly zero for them).
   */
-object GeoIndex {
+object GeoIndex extends DepthGatedStore {
+
+  protected def baseName: String = "cells"
 
   private val metaSchema = StructType(Seq(
     StructField("id_col", StringType, nullable = false),
@@ -188,19 +190,15 @@ object GeoIndex {
     // single writer, and a crash mid-write leaves the store a rebuild
     // re-runs anyway (OPTIMIZATION_r18.md, advisor item 2).
     DeltaLog.inParallel(
-      () => spark.createDataFrame(
-          spark.sparkContext.parallelize(
-            Seq(Row(idCol, latCol, lonCol, cellDeg)), 1), metaSchema)
-        .write.mode("overwrite").parquet(s"$dir/meta"),
+      () => writeRows(spark, s"$dir/meta", metaSchema,
+        Seq(Row(idCol, latCol, lonCol, cellDeg))),
       () => DeltaLog.installBase(spark, dir, "cells", fenceDomain = dir) { tmp =>
         checkedPoints(points, latCol, lonCol)
           .withColumn("cell", cellExpr(latCol, lonCol, cellDeg))
           .repartition(col("cell"))
           .write.mode("overwrite").partitionBy("cell").parquet(tmp)
       }: Unit)
-    // a rebuild starts a fresh history: everything live is in the base
-    DeltaLog.fs(spark, dir).delete(new Path(s"$dir/commits"), true)
-    DeltaLog.initRoot(spark, s"$dir/commits")
+    resetLog(spark, dir)
     metaCache.put((spark, dir),
       (metaMTime(spark, dir), Meta(idCol, latCol, lonCol, cellDeg)))
   }
@@ -223,14 +221,7 @@ object GeoIndex {
     require(m.idCol == idCol && m.latCol == latCol && m.lonCol == lonCol,
       s"index at $dir was built over ('${m.idCol}', '${m.latCol}', " +
         s"'${m.lonCol}'), not ('$idCol', '$latCol', '$lonCol')")
-    val g = points.agg(count(lit(1)).as("n"),
-      count_distinct(col(idCol)).as("nd"),
-      count(when(col(idCol).isNull, 1)).as("nn")).head()
-    require(g.getLong(2) == 0 && g.getLong(0) == g.getLong(1),
-      s"upsert: batch carries a null or duplicated '$idCol' " +
-        s"(${g.getLong(0)} rows, ${g.getLong(1)} distinct non-null ids); " +
-        "a commit owns each non-null id once — dedupe last-writer-wins " +
-        "upstream")
+    requireUniqueKeys(points, idCol)
     // one file per O(batch) commit leg, cell-sorted for row-group
     // pruning: the batch inherits the source scan's partitioning (32
     // near-empty files per tiny commit otherwise), and every later read
@@ -240,8 +231,7 @@ object GeoIndex {
       .withColumn("cell", cellExpr(latCol, lonCol, m.cellDeg))
       .select(col(idCol), col(latCol), col(lonCol), col("cell"))
       .coalesce(1).sortWithinPartitions("cell")
-    DeltaLog.commit(spark, s"$dir/commits",
-        DeltaLog.nextSeq(spark, s"$dir/commits"), "docs", fenceDomain = dir) { tmp =>
+    commit(spark, dir) { tmp =>
       DeltaLog.inParallel( // independent O(batch) legs → concurrent jobs (r17)
         () => tagged.write.mode("overwrite").parquet(s"$tmp/cells"),
         () => tagged.select(col(idCol))
@@ -250,28 +240,16 @@ object GeoIndex {
   }
 
   /** Delete by key: the ids claim ownership with no points — a keyed
-    * tombstone, O(ids) bytes. Returns the commit sequence.
+    * tombstone, O(ids) bytes; null ids are dropped. Returns the commit
+    * sequence.
     */
   def delete(ids: DataFrame, idCol: String, dir: String): Int = {
     val spark = ids.sparkSession
     val m = readMeta(spark, dir)
     require(m.idCol == idCol,
       s"index at $dir is keyed by '${m.idCol}', not '$idCol'")
-    val baseSchema = spark.read
-      .parquet(DeltaLog.currentBase(spark, dir, "cells")).schema
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], baseSchema).repartition(1)
-    DeltaLog.commit(spark, s"$dir/commits",
-        DeltaLog.nextSeq(spark, s"$dir/commits"), "docs", fenceDomain = dir) { tmp =>
-      DeltaLog.inParallel( // independent legs → concurrent jobs (r17)
-        () => empty.write.mode("overwrite").parquet(s"$tmp/cells"),
-        () => ids.select(col(idCol)).distinct().coalesce(1)
-          .write.mode("overwrite").parquet(s"$tmp/docs"))
-    }
+    commitTombstones(spark, dir, ids.select(col(idCol)))
   }
-
-  private def commitSeqs(spark: SparkSession, dir: String): Seq[Int] =
-    DeltaLog.listSeqs(spark, s"$dir/commits", Some("docs"))
 
   /** The LIVE point set, id-granular last-writer-wins over base +
     * commits, with an optional cell filter pushed into EVERY leg (sound
@@ -280,68 +258,23 @@ object GeoIndex {
     * on the O(batch) commit legs. The owner table is never filtered —
     * a base row superseded by an out-of-cover upsert must still lose.
     */
-  private def live(spark: SparkSession, dir: String,
+  private[sink] def live(spark: SparkSession, dir: String,
       cellFilter: Option[Seq[Int]],
       preSeqs: Option[Seq[Int]] = None): DataFrame = {
     val m = readMeta(spark, dir)
     def pruned(df: DataFrame): DataFrame =
       cellFilter.fold(df)(cs => df.filter(col("cell").isin(cs: _*)))
-    val base = pruned(
-      spark.read.parquet(DeltaLog.currentBase(spark, dir, "cells")))
     val seqs = preSeqs.getOrElse(commitSeqs(spark, dir))
-    if (seqs.isEmpty) base
-    else {
-      val all = seqs.foldLeft(base.withColumn("_seq", lit(0))) { (acc, s) =>
-        acc.unionByName(
-          pruned(spark.read.parquet(s"$dir/commits/$s/cells"))
-            .withColumn("_seq", lit(s)))
-      }
-      val owners = seqs.map { s =>
-        spark.read.parquet(s"$dir/commits/$s/docs")
-          .select(col(m.idCol), lit(s).as("_live_seq"))
-      }.reduce(_.unionByName(_))
-        .groupBy(col(m.idCol)).agg(max("_live_seq").as("_live_seq"))
-      val cols = base.columns.map(col).toSeq
-      all.join(broadcast(owners), Seq(m.idCol), "left")
-        .filter(col("_seq") === coalesce(col("_live_seq"), lit(0)))
-        .select(cols: _*)
-    }
+    val base = spark.read.parquet(DeltaLog.currentBase(spark, dir, "cells"))
+    liveView(pruned(base), seqs, ownerTable(spark, dir, seqs, m.idCol),
+      m.idCol)(s => pruned(leg(spark, dir, s, "cells")))
   }
 
-  /** Fold all commits into a fresh cell-partitioned base — the only
-    * index-sized write, run as maintenance ([[VectorIndex.compact]]
-    * contract). Installed via [[DeltaLog.installBase]]: written in
-    * place, sealed by the marker — no directory rename, so a concurrent
-    * reader on an object store never sees a partial base.
-    * Maintenance contract (who may call, from where, `epoch`):
-    * [[VectorIndex.compact]].
-    */
-  def compact(spark: SparkSession, dir: String,
-      keepGenerations: Int = 1, epoch: WriterEpoch = null): Unit = {
-    val seqs = commitSeqs(spark, dir)
-    if (seqs.isEmpty) return
-    val we = DeltaLog.resolveEpoch(spark, dir, epoch)
-    val folded = live(spark, dir, None)
-    DeltaLog.installBase(spark, dir, "cells", keepGenerations, fenceDomain = dir, epoch = we) { tmp =>
-      folded.write.mode("overwrite").partitionBy("cell").parquet(tmp)
-    }: Unit
-    // fenced since the install => never GC the folded log: a
-    // zombie compactor must not delete commits a rival's view holds
-    DeltaLog.checkFence(spark, we)
-    val f = DeltaLog.fs(spark, dir)
-    seqs.foreach(s => f.delete(new Path(s"$dir/commits/$s"), true))
-  }
-
-  /** Compact iff the commit log is deeper than `maxDeltas` — the
-    * stats-driven auto-compaction policy of the shared mutation
-    * contract ([[VectorIndex.maybeCompact]] parity). Returns whether a
-    * compaction ran.
-    */
-  def maybeCompact(spark: SparkSession, dir: String,
-      maxDeltas: Int = 8, keepGenerations: Int = 1): Boolean = {
-    val rec = commitSeqs(spark, dir).length > maxDeltas
-    if (rec) compact(spark, dir, keepGenerations)
-    rec
+  /** The compaction fold: the live view, cell-partitioned. */
+  protected def fold(spark: SparkSession, dir: String,
+      seqs: Seq[Int]): String => Unit = {
+    val folded = live(spark, dir, None, Some(seqs))
+    tmp => folded.write.mode("overwrite").partitionBy("cell").parquet(tmp)
   }
 
   /** One-row index health report:

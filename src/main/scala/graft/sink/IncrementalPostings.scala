@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   *
   * Read-time resolution is document-granular last-writer-wins: a doc's
   * postings come from the highest sequence that wrote it (the base if
-  * none did). `owners` — one row per EVER-TOUCHED doc, not per corpus
+  * none did). The owner table — one row per EVER-TOUCHED doc, not per corpus
   * doc — joins the union of base and delta postings; steady-state
   * ingest touches a vanishing fraction of the corpus, so the owner
   * table stays small and broadcastable until compaction folds it away.
@@ -34,7 +34,10 @@ import org.apache.spark.sql.functions._
   * index-sized write, and it is a maintenance job, not an ingest cost —
   * exactly the contract of `ParquetIndexSink.compactDeltas`.
   */
-object IncrementalPostings {
+object IncrementalPostings extends IncrementalStore {
+
+  override protected def logRoot: String = "deltas"
+  protected def baseName: String = "base"
 
   // r18: isolated read session for the positional→flat derive (one per
   // parent session, memoized — newSession() builds a whole SessionState
@@ -42,15 +45,20 @@ object IncrementalPostings {
   // Its one-shot conf (huge file-open cost ⇒ one scan partition per
   // file; oversized files still split) keeps the derived flat postings'
   // term-range layout file for file without perturbing concurrent legs
-  // of the parent session.
+  // of the parent session. Keyed WEAKLY so a dropped parent session (and
+  // its derived one) can be collected: newSession() shares only the
+  // SparkContext and SharedState, never a reference to its parent, so
+  // the value cannot pin the key.
   private val filePerSplitSessions =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
-  private def filePerSplitSession(spark: SparkSession): SparkSession =
-    filePerSplitSessions.computeIfAbsent(spark, { s =>
-      val rs = s.newSession()
-      rs.conf.set("spark.sql.files.openCostInBytes", (1L << 40).toString)
-      rs
-    })
+    new java.util.WeakHashMap[SparkSession, SparkSession]()
+  private[sink] def filePerSplitSession(spark: SparkSession): SparkSession =
+    filePerSplitSessions.synchronized {
+      filePerSplitSessions.computeIfAbsent(spark, { s =>
+        val rs = s.newSession()
+        rs.conf.set("spark.sql.files.openCostInBytes", (1L << 40).toString)
+        rs
+      })
+    }
 
   /** Lay down the base index (sequence 0). `withPositions` makes the
     * index POSITIONAL — Lucene's positions data, phrase-query-capable
@@ -97,15 +105,12 @@ object IncrementalPostings {
         () => InvertedIndex.docLengths(docs, idCol, textCol)
           .write.mode("overwrite").parquet(s"$tmp/norms"))
     }: Unit
-    DeltaLog.initRoot(spark, s"$dir/deltas")
+    DeltaLog.initRoot(spark, s"$dir/$logRoot")
   }
 
   private def hasPositions(spark: SparkSession, dir: String): Boolean =
     DeltaLog.fs(spark, dir).exists(
       new Path(s"${DeltaLog.currentBase(spark, dir, "base")}/positional"))
-
-  private def deltaSeqs(spark: SparkSession, dir: String): Seq[Int] =
-    DeltaLog.listSeqs(spark, s"$dir/deltas", Some("docs"))
 
   /** Commit one batch of upserted documents as a delta: postings + norms
     * for the batch, and the batch's ids as the ownership record. The
@@ -134,8 +139,7 @@ object IncrementalPostings {
         s"(${g.getLong(0)} rows, ${g.getLong(1)} distinct); a delta owns " +
         "each doc once — pass an order column to dedupe last-writer-wins")
     val positional = hasPositions(spark, dir)
-    DeltaLog.commit(spark, s"$dir/deltas",
-        DeltaLog.nextSeq(spark, s"$dir/deltas"), "docs", fenceDomain = dir) { tmp =>
+    commit(spark, dir) { tmp =>
       // r17: the 3–4 O(batch) legs are independent writes into the same
       // pre-rename temp dir — run them as concurrent jobs (guide §2.6);
       // on the positional index the flat postings derive from the
@@ -187,75 +191,49 @@ object IncrementalPostings {
   }
 
   /** Commit deletions: the ids claim ownership with no postings/norms —
-    * a keyed tombstone, O(ids) bytes.
+    * a keyed tombstone, O(ids) bytes; null ids are dropped.
     */
-  def commitDeletes(ids: DataFrame, idCol: String, dir: String): Int = {
-    val spark = ids.sparkSession
-    val docs = ids.select(col(idCol).cast("long").as("doc_id")).distinct()
-    val positional = hasPositions(spark, dir)
-    DeltaLog.commit(spark, s"$dir/deltas",
-        DeltaLog.nextSeq(spark, s"$dir/deltas"), "docs", fenceDomain = dir) { tmp =>
-      // empty postings/norms with the right schemas: a delete owns the
-      // doc and contributes nothing. Independent legs → concurrent jobs
-      // (guide §2.6, r17)
-      DeltaLog.inParallel(
-        () => docs.limit(0)
-          .select(lit("").as("term"), col("doc_id"), lit(0).cast("int").as("tf"))
-          .write.mode("overwrite").parquet(s"$tmp/postings"),
-        () => docs.limit(0).select(col("doc_id"), lit(0).cast("int").as("dl"))
-          .write.mode("overwrite").parquet(s"$tmp/norms"),
-        () =>
-          if (positional)
-            docs.limit(0)
-              .select(lit("").as("term"), col("doc_id"),
-                array().cast("array<int>").as("positions"))
-              .write.mode("overwrite").parquet(s"$tmp/positional"),
-        () => docs.write.mode("overwrite").parquet(s"$tmp/docs"))
-    }
+  def commitDeletes(ids: DataFrame, idCol: String, dir: String): Int =
+    commitTombstones(ids.sparkSession, dir,
+      ids.select(col(idCol).cast("long").as("doc_id")))
+
+  /** Empty postings/norms (and positional) with the right schemas: a
+    * delete owns the doc and contributes nothing.
+    */
+  override protected def emptyLegs(spark: SparkSession, dir: String,
+      keys: DataFrame): Seq[(String, DataFrame)] = {
+    val none = keys.limit(0)
+    Seq("postings" -> none.select(lit("").as("term"), col("doc_id"),
+        lit(0).cast("int").as("tf")),
+      "norms" -> none.select(col("doc_id"), lit(0).cast("int").as("dl"))) ++
+      (if (hasPositions(spark, dir)) Seq("positional" -> none.select(
+        lit("").as("term"), col("doc_id"),
+        array().cast("array<int>").as("positions")))
+      else Nil)
   }
 
-  /** One row per ever-touched doc: the highest sequence that wrote it. */
-  private def owners(spark: SparkSession, dir: String,
-      seqs: Seq[Int]): DataFrame =
-    seqs.map { s =>
-      spark.read.parquet(s"$dir/deltas/$s/docs")
-        .select(col("doc_id"), lit(s).as("_live_seq"))
-    }.reduce(_.unionByName(_))
-      .groupBy("doc_id").agg(max("_live_seq").as("_live_seq"))
+  /** The live `sub` view (postings, norms or positional) over base +
+    * `seqs`, resolved against the owner table `o`.
+    */
+  private def view(spark: SparkSession, dir: String, sub: String,
+      seqs: Seq[Int], o: Option[DataFrame]): DataFrame =
+    liveView(spark.read.parquet(
+        s"${DeltaLog.currentBase(spark, dir, "base")}/$sub"),
+      seqs, o, "doc_id")(leg(spark, dir, _, sub))
 
-  private def resolve(spark: SparkSession, dir: String, sub: String,
-      seqs: Seq[Int], ownersDf: Option[DataFrame],
-      readBase: String => DataFrame): DataFrame = {
-    val base = readBase(
-      s"${DeltaLog.currentBase(spark, dir, "base")}/$sub")
-      .withColumn("_seq", lit(0))
-    val all = seqs.foldLeft(base) { (acc, s) =>
-      acc.unionByName(spark.read.parquet(s"$dir/deltas/$s/$sub")
-        .withColumn("_seq", lit(s)))
-    }
-    val cols = base.columns.filterNot(_ == "_seq").map(col).toSeq
-    ownersDf match {
-      case None => all.drop("_seq")
-      case Some(o) => all
-        // the owner table is one row per TOUCHED doc — broadcast until
-        // compaction resets it
-        .join(broadcast(o), Seq("doc_id"), "left")
-        .filter(col("_seq") === coalesce(col("_live_seq"), lit(0)))
-        .select(cols: _*) // the join moved doc_id first; restore the layout
-    }
+  /** Postings and norms off ONE owner table. */
+  private def views(spark: SparkSession, dir: String,
+      seqs: Seq[Int]): (DataFrame, DataFrame) = {
+    val o = ownerTable(spark, dir, seqs, "doc_id")
+    (view(spark, dir, "postings", seqs, o), view(spark, dir, "norms", seqs, o))
   }
 
   /** Both live views off ONE delta listing and ONE owner table — a query
     * needs postings and norms, and each delta-log scan is metadata I/O
     * worth paying once.
     */
-  def liveViews(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val seqs = deltaSeqs(spark, dir)
-    val o = if (seqs.isEmpty) None else Some(owners(spark, dir, seqs))
-    (resolve(spark, dir, "postings", seqs, o,
-        p => InvertedIndex.readPostings(spark, p)),
-      resolve(spark, dir, "norms", seqs, o, p => spark.read.parquet(p)))
-  }
+  def liveViews(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
+    views(spark, dir, commitSeqs(spark, dir))
 
   /** The live postings view (last writer per doc wins). Term filters push
     * into every union leg's scan.
@@ -273,9 +251,8 @@ object IncrementalPostings {
   def livePositional(spark: SparkSession, dir: String): DataFrame = {
     require(hasPositions(spark, dir),
       s"index at $dir was not initialized withPositions = true")
-    val seqs = deltaSeqs(spark, dir)
-    val o = if (seqs.isEmpty) None else Some(owners(spark, dir, seqs))
-    resolve(spark, dir, "positional", seqs, o, p => spark.read.parquet(p))
+    val seqs = commitSeqs(spark, dir)
+    view(spark, dir, "positional", seqs, ownerTable(spark, dir, seqs, "doc_id"))
   }
 
   /** Exact-phrase search over the LIVE positional view — the
@@ -313,7 +290,7 @@ object IncrementalPostings {
     * [[IndexSink.history]] contract on the postings layout.
     */
   def versions(spark: SparkSession, dir: String): Seq[Int] = {
-    0 +: deltaSeqs(spark, dir)
+    0 +: commitSeqs(spark, dir)
   }
 
   /** TIME TRAVEL: BM25 as of commit `version` — the views resolved over
@@ -325,16 +302,11 @@ object IncrementalPostings {
     */
   def bm25SearchAt(spark: SparkSession, dir: String, version: Int,
       query: String, k: Int): DataFrame = {
-    val all = deltaSeqs(spark, dir)
+    val all = commitSeqs(spark, dir)
     require(version == 0 || all.contains(version),
       s"no version $version at $dir (have ${(0 +: all).mkString(", ")}); " +
         "compaction folds history into version 0")
-    val seqs = all.filter(_ <= version)
-    val o = if (seqs.isEmpty) None else Some(owners(spark, dir, seqs))
-    val postings = resolve(spark, dir, "postings", seqs, o,
-      p => InvertedIndex.readPostings(spark, p))
-    val norms = resolve(spark, dir, "norms", seqs, o,
-      p => spark.read.parquet(p))
+    val (postings, norms) = views(spark, dir, all.filter(_ <= version))
     InvertedIndex.bm25Search(postings, norms, query, k)
   }
 
@@ -348,7 +320,7 @@ object IncrementalPostings {
     *   - `n_base_docs` — docs folded into the term-sorted base.
     *   - `n_touched_docs` — ever-touched-since-compaction ids (the owner
     *     table size — the thing that must stay broadcastable; see
-    *     [[owners]]).
+    *     [[IncrementalStore.ownerTable]]).
     *   - `n_tombstones` — docs whose LATEST write is a delete (a
     *     delete-then-reupsert is alive, not a tombstone).
     *   - `n_deltas` — commit-log depth = extra union legs per query.
@@ -362,23 +334,19 @@ object IncrementalPostings {
     */
   def stats(spark: SparkSession, dir: String, maxDeltas: Int = 8,
       touchedFraction: Double = 0.2): DataFrame = {
-    val seqs = deltaSeqs(spark, dir)
+    val seqs = commitSeqs(spark, dir)
     val nBase = spark.read
       .parquet(s"${DeltaLog.currentBase(spark, dir, "base")}/norms").count()
-    val (touched, tombstones, nLive) =
-      if (seqs.isEmpty) (0L, 0L, nBase)
-      else {
-        val o = owners(spark, dir, seqs)
+    val (touched, tombstones, nLive) = ownerTable(spark, dir, seqs, "doc_id")
+      .fold((0L, 0L, nBase)) { o =>
         val touched = o.count()
         // a doc is alive-in-the-log iff its OWNING delta wrote a norms row
         val deltaNorms = seqs.map(s =>
-          spark.read.parquet(s"$dir/deltas/$s/norms")
-            .select(col("doc_id"), lit(s).as("_seq")))
+          leg(spark, dir, s, "norms").select(col("doc_id"), lit(s).as("_seq")))
           .reduce(_.unionByName(_))
         val aliveTouched = deltaNorms.join(broadcast(o), Seq("doc_id"))
           .filter(col("_seq") === col("_live_seq")).count()
-        val nLive = resolve(spark, dir, "norms", seqs, Some(o),
-          p => spark.read.parquet(p)).count()
+        val nLive = view(spark, dir, "norms", seqs, Some(o)).count()
         (touched, touched - aliveTouched, nLive)
       }
     val recommended =
@@ -391,6 +359,9 @@ object IncrementalPostings {
       lit(seqs.size.toLong).as("n_deltas"),
       lit(recommended).as("compact_recommended"))
   }
+
+  def stats(spark: SparkSession, dir: String): DataFrame =
+    stats(spark, dir, maxDeltas = 8)
 
   /** Stats-driven maintenance hook: [[compact]] exactly when [[stats]]
     * recommends it — the auto-compaction policy an ingest loop calls
@@ -406,27 +377,24 @@ object IncrementalPostings {
     rec
   }
 
-  /** Fold all deltas into a fresh term-sorted base — the only index-sized
-    * write, run as maintenance (the `ParquetIndexSink.compactDeltas`
-    * contract). Materializes the resolved views and installs them as a
-    * new base generation via [[DeltaLog.installBase]] — written in
-    * place, sealed by the marker, no directory rename, so an
-    * object-store reader never sees a partial base. A crash after the
-    * install but before the delta cleanup only leaves redundant deltas,
-    * which resolve idempotently (each doc's delta rows equal what the
-    * fold wrote to the base, and last-writer-wins picks exactly one
-    * copy). Maintenance contract (who may call, from where, `epoch`):
-    * [[VectorIndex.compact]].
+  /** The [[Stores.maybeCompact]] entry: this store's rule above with
+    * the default `touchedFraction` — it folds at depth == `maxDeltas`,
+    * not only past it like the depth-gated stores.
     */
-  def compact(spark: SparkSession, dir: String,
-      keepGenerations: Int = 1, epoch: WriterEpoch = null): Unit = {
-    val seqs = deltaSeqs(spark, dir)
-    if (seqs.isEmpty) return
-    val we = DeltaLog.resolveEpoch(spark, dir, epoch)
+  def maybeCompact(spark: SparkSession, dir: String, maxDeltas: Int,
+      keepGenerations: Int): Boolean =
+    maybeCompact(spark, dir, maxDeltas, 0.2, keepGenerations)
+
+  /** The compaction fold: the views off ONE owner table, term-sorted. */
+  protected def fold(spark: SparkSession, dir: String,
+      seqs: Seq[Int]): String => Unit = {
+    val o = ownerTable(spark, dir, seqs, "doc_id")
+    val postings = view(spark, dir, "postings", seqs, o)
+    val norms = view(spark, dir, "norms", seqs, o)
     val positional =
-      if (hasPositions(spark, dir)) Some(livePositional(spark, dir)) else None
-    val (postings, norms) = liveViews(spark, dir)
-    DeltaLog.installBase(spark, dir, "base", keepGenerations, fenceDomain = dir, epoch = we) { tmp =>
+      if (hasPositions(spark, dir)) Some(view(spark, dir, "positional", seqs, o))
+      else None
+    tmp =>
       // r17: the three folded views are independent resolutions —
       // concurrent jobs (guide §2.6); each writePostings persists its
       // input across the range sample (persistInput — the resolution
@@ -439,11 +407,5 @@ object IncrementalPostings {
         () => positional.foreach(p =>
           InvertedIndex.writePostings(p, s"$tmp/positional",
             persistInput = true)))
-    }: Unit
-    // fenced since the install => never GC the folded log: a
-    // zombie compactor must not delete commits a rival's view holds
-    DeltaLog.checkFence(spark, we)
-    val f = DeltaLog.fs(spark, dir)
-    seqs.foreach(s => f.delete(new Path(s"$dir/deltas/$s"), true))
   }
 }

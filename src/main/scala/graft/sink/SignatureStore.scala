@@ -1,6 +1,5 @@
 package graft.sink
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -50,7 +49,9 @@ import graft.operators.Dedup
   * [[Dedup.verifyJaccard]] on O(candidates) pairs. [[compact]] folds the
   * commit log and is the only index-sized write.
   */
-object SignatureStore {
+object SignatureStore extends DepthGatedStore {
+
+  protected def baseName: String = "buckets"
 
   private val metaSchema = StructType(Seq(
     StructField("id_col", StringType, nullable = false),
@@ -97,33 +98,15 @@ object SignatureStore {
     // (guide §2.6). r18: advisor's meta-before-install ordering measured
     // and rejected — rationale at GeoIndex.write.
     DeltaLog.inParallel(
-      () => spark.createDataFrame(
-          spark.sparkContext.parallelize(
-            Seq(Row(idCol, textCol, shingleN, numHashes, bands, nPb)), 1),
-          metaSchema)
-        .write.mode("overwrite").parquet(s"$dir/meta"),
+      () => writeRows(spark, s"$dir/meta", metaSchema,
+        Seq(Row(idCol, textCol, shingleN, numHashes, bands, nPb))),
       () => DeltaLog.installBase(spark, dir, "buckets", fenceDomain = dir) { tmp =>
         signed(df, m)
           .repartition(col("pb")).sortWithinPartitions("band", "bucket")
           .write.mode("overwrite").partitionBy("pb").parquet(tmp)
       }: Unit)
-    DeltaLog.fs(spark, dir).delete(new Path(s"$dir/commits"), true)
-    DeltaLog.initRoot(spark, s"$dir/commits")
+    resetLog(spark, dir)
   }
-
-  /** One row per ever-touched doc: the highest commit sequence that wrote
-    * (or tombstoned) it — the [[IncrementalPostings]] ownership design on
-    * the signature layout. None when the log is empty (base-only reads
-    * skip the join entirely).
-    */
-  private def owners(spark: SparkSession, dir: String,
-      seqs: Seq[Int]): Option[DataFrame] =
-    if (seqs.isEmpty) None
-    else Some(seqs.map { s =>
-        spark.read.parquet(s"$dir/commits/$s/docs")
-          .select(col("_id"), lit(s).as("_live_seq"))
-      }.reduce(_.unionByName(_))
-      .groupBy("_id").agg(max("_live_seq").as("_live_seq")))
 
   /** The store's LIVE banded rows, optionally pruned to a residue set:
     * base (partition-pruned, seq 0) plus each O(batch) commit leg,
@@ -132,25 +115,14 @@ object SignatureStore {
     * so upserted docs keep only their newest signing and tombstoned docs
     * vanish from every probe, self-pair audit, and compaction fold.
     */
-  private def bucketRows(spark: SparkSession, dir: String,
-      pbs: Option[Seq[Int]]): DataFrame = {
+  private[sink] def bucketRows(spark: SparkSession, dir: String,
+      seqs: Seq[Int], pbs: Option[Seq[Int]]): DataFrame = {
     def prune(df: DataFrame) =
       pbs.fold(df)(r => df.filter(col("pb").isin(r: _*)))
-    val seqs = DeltaLog.listSeqs(spark, s"$dir/commits", Some("docs"))
-    val base = prune(
-      spark.read.parquet(DeltaLog.currentBase(spark, dir, "buckets")))
-      .withColumn("_seq", lit(0))
-    val all = seqs.foldLeft(base) { (acc, s) =>
-      acc.unionByName(prune(spark.read.parquet(s"$dir/commits/$s/buckets"))
-        .withColumn("_seq", lit(s)))
-    }
-    owners(spark, dir, seqs) match {
-      case None => all.drop("_seq")
-      case Some(o) => all
-        .join(broadcast(o), Seq("_id"), "left")
-        .filter(col("_seq") === coalesce(col("_live_seq"), lit(0)))
-        .select("_id", "sig", "band", "bucket", "pb")
-    }
+    liveView(prune(
+        spark.read.parquet(DeltaLog.currentBase(spark, dir, "buckets"))),
+        seqs, ownerTable(spark, dir, seqs, "_id"), "_id")(s =>
+      prune(leg(spark, dir, s, "buckets")))
   }
 
   /** Candidate near-dup pairs for a NEW batch: every (batch doc, store
@@ -200,7 +172,7 @@ object SignatureStore {
     require(maxBucketOccupancy >= 2,
       s"maxBucketOccupancy must be >= 2, got $maxBucketOccupancy")
     val pbs = q0.select("pb").distinct().collect().map(_.getInt(0)).toSeq
-    val store0 = bucketRows(spark, dir, Some(pbs))
+    val store0 = bucketRows(spark, dir, commitSeqs(spark, dir), Some(pbs))
     val (store, q) =
       if (maxBucketOccupancy == Int.MaxValue) (store0, q0)
       else {
@@ -255,7 +227,7 @@ object SignatureStore {
     require(maxBucketOccupancy >= 2,
       s"maxBucketOccupancy must be >= 2, got $maxBucketOccupancy")
     val m = readMeta(spark, dir)
-    val rows0 = bucketRows(spark, dir, None)
+    val rows0 = bucketRows(spark, dir, commitSeqs(spark, dir), None)
     val rows =
       if (maxBucketOccupancy == Int.MaxValue) rows0
       else {
@@ -295,8 +267,7 @@ object SignatureStore {
     val rows = signed(batch, m).repartition(1)
       .sortWithinPartitions("band", "bucket")
     val docs = batch.select(col(m.idCol).as("_id")).distinct().coalesce(1)
-    DeltaLog.commit(spark, s"$dir/commits",
-        DeltaLog.nextSeq(spark, s"$dir/commits"), "buckets", fenceDomain = dir) { tmp =>
+    commit(spark, dir, "buckets") { tmp =>
       DeltaLog.inParallel( // independent O(batch) legs → concurrent jobs (r17)
         () => rows.write.mode("overwrite").parquet(s"$tmp/buckets"),
         () => docs.write.mode("overwrite").parquet(s"$tmp/docs"))
@@ -323,8 +294,7 @@ object SignatureStore {
     // store legs resolve their commit list NOW — before the append
     val pairs = probeCore(spark, dir, m, q0, maxBucketOccupancy)
     val docs = batch.select(col(m.idCol).as("_id")).distinct().coalesce(1)
-    DeltaLog.commit(spark, s"$dir/commits",
-        DeltaLog.nextSeq(spark, s"$dir/commits"), "buckets", fenceDomain = dir) { tmp =>
+    commit(spark, dir, "buckets") { tmp =>
       // one file per O(batch) commit leg: every later probe re-lists
       // every commit's files, so leg file count is a serving cost. The
       // coalesce reads the persisted blocks, not the signing lineage
@@ -342,47 +312,18 @@ object SignatureStore {
     * corpus must not keep vetoing lookalike admissions through its stale
     * signatures. A later [[append]] of the same id resurrects it (its
     * newer commit wins); [[compact]] folds tombstones away physically.
+    * Null ids are dropped ([[IncrementalStore.commitTombstones]]).
     */
-  def delete(ids: DataFrame, idCol: String, dir: String): Int = {
-    val spark = ids.sparkSession
-    require(ids.filter(col(idCol).isNull).limit(1).collect().isEmpty,
-      s"SignatureStore: null '$idCol' cannot be deleted")
-    val docs = ids.select(col(idCol).as("_id")).distinct()
-    val emptyBuckets = docs.limit(0).select(col("_id"),
-      array().cast("array<bigint>").as("sig"),
-      lit(0).cast("int").as("band"), lit(0L).as("bucket"),
-      lit(0).cast("int").as("pb"))
-    DeltaLog.commit(spark, s"$dir/commits",
-        DeltaLog.nextSeq(spark, s"$dir/commits"), "docs", fenceDomain = dir) { tmp =>
-      DeltaLog.inParallel( // independent legs → concurrent jobs (r17)
-        () => emptyBuckets.write.mode("overwrite").parquet(s"$tmp/buckets"),
-        () => docs.write.mode("overwrite").parquet(s"$tmp/docs"))
-    }
-  }
+  def delete(ids: DataFrame, idCol: String, dir: String): Int =
+    commitTombstones(ids.sparkSession, dir, ids.select(col(idCol).as("_id")))
 
-  /** Fold the commit log into a fresh residue-partitioned base — the only
-    * index-sized write; maintenance, not ingest. The new generation is
-    * installed via [[DeltaLog.installBase]] (written in place, sealed by
-    * the marker — object-store-safe, no directory rename anywhere).
-    * Maintenance contract (who may call, from where, `epoch`):
-    * [[VectorIndex.compact]].
-    */
-  def compact(spark: SparkSession, dir: String,
-      keepGenerations: Int = 1, epoch: WriterEpoch = null): Unit = {
-    val seqs = DeltaLog.listSeqs(spark, s"$dir/commits", Some("docs"))
-    if (seqs.isEmpty) return
-    val we = DeltaLog.resolveEpoch(spark, dir, epoch)
-    val folded = bucketRows(spark, dir, None)
-    DeltaLog.installBase(spark, dir, "buckets", keepGenerations, fenceDomain = dir, epoch = we) { tmp =>
-      folded
-        .repartition(col("pb")).sortWithinPartitions("band", "bucket")
-        .write.mode("overwrite").partitionBy("pb").parquet(tmp)
-    }: Unit
-    // fenced since the install => never GC the folded log: a
-    // zombie compactor must not delete commits a rival's view holds
-    DeltaLog.checkFence(spark, we)
-    val f = DeltaLog.fs(spark, dir)
-    seqs.foreach(s => f.delete(new Path(s"$dir/commits/$s"), true))
+  /** The compaction fold: the live rows, residue-partitioned. */
+  protected def fold(spark: SparkSession, dir: String,
+      seqs: Seq[Int]): String => Unit = {
+    val folded = bucketRows(spark, dir, seqs, None)
+    tmp => folded
+      .repartition(col("pb")).sortWithinPartitions("band", "bucket")
+      .write.mode("overwrite").partitionBy("pb").parquet(tmp)
   }
 
   /** One-row health report: `(n_docs, n_rows, n_pending_commits,
@@ -393,8 +334,9 @@ object SignatureStore {
     */
   def stats(spark: SparkSession, dir: String,
       maxDeltas: Int = 8): DataFrame = {
-    val pending = DeltaLog.listSeqs(spark, s"$dir/commits", Some("docs")).length
-    bucketRows(spark, dir, None)
+    val seqs = commitSeqs(spark, dir)
+    val pending = seqs.length
+    bucketRows(spark, dir, seqs, None)
       .agg(count_distinct(col("_id")).as("n_docs"),
         count(lit(1)).as("n_rows"))
       .select(col("n_docs"), col("n_rows"),
@@ -402,15 +344,6 @@ object SignatureStore {
         lit(pending > maxDeltas).as("compact_recommended"))
   }
 
-  /** Compact iff the commit log is deeper than `maxDeltas` — the
-    * stats-driven auto-compaction policy an ingest loop calls after each
-    * append ([[IncrementalPostings.maybeCompact]] parity). Returns
-    * whether a compaction ran.
-    */
-  def maybeCompact(spark: SparkSession, dir: String,
-      maxDeltas: Int = 8, keepGenerations: Int = 1): Boolean = {
-    val rec = DeltaLog.listSeqs(spark, s"$dir/commits", Some("docs")).length > maxDeltas
-    if (rec) compact(spark, dir, keepGenerations)
-    rec
-  }
+  def stats(spark: SparkSession, dir: String): DataFrame =
+    stats(spark, dir, maxDeltas = 8)
 }

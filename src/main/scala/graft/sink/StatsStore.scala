@@ -1,6 +1,5 @@
 package graft.sink
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -32,7 +31,10 @@ import org.apache.spark.sql.types._
   * sketches are built over the value's string rendering (injective per
   * type), so heterogeneous columns share one binary sketch column.
   */
-object StatsStore {
+object StatsStore extends DepthGatedStore {
+
+  protected def baseName: String = "base"
+  override protected def tag: String = "stats"
 
   private val metaSchema = StructType(Seq(
     StructField("col_name", StringType, nullable = false),
@@ -146,7 +148,7 @@ object StatsStore {
       probs: Seq[Double]): DataFrame = {
     require(probs.nonEmpty && probs.forall(p => p > 0 && p < 1),
       s"probs must be in (0, 1), got $probs")
-    val rows = partialRows(spark, dir)
+    val rows = partialRows(spark, dir, commitSeqs(spark, dir))
     mergedQuantileRows(rows, probs)
       .join(rows.filter(col("qtiles").isNotNull).groupBy("col_name")
         .agg(sum("n_nonnull").as("n_nonnull")), "col_name")
@@ -163,16 +165,13 @@ object StatsStore {
     val spark = df.sparkSession
     val kinds = columns.map(c =>
       (c, if (isNum(df.schema(c).dataType)) "num" else "str"))
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(kinds.map { case (c, k) => Row(c, k) }, 1),
-        metaSchema)
-      .write.mode("overwrite").parquet(s"$dir/meta")
+    writeRows(spark, s"$dir/meta", metaSchema,
+      kinds.map { case (c, k) => Row(c, k) })
     DeltaLog.installBase(spark, dir, "base", fenceDomain = dir) { tmp =>
       partials(df, kinds.sorted, lgK).coalesce(1)
         .write.mode("overwrite").parquet(tmp)
     }: Unit
-    DeltaLog.fs(spark, dir).delete(new Path(s"$dir/commits"), true)
-    DeltaLog.initRoot(spark, s"$dir/commits")
+    resetLog(spark, dir)
   }
 
   /** Contribute a batch: ONE commit holding #columns partial rows —
@@ -184,20 +183,19 @@ object StatsStore {
     val spark = batch.sparkSession
     val cols = readMeta(spark, dir)
     val rows = partials(batch, cols, lgK).coalesce(1)
-    DeltaLog.commit(spark, s"$dir/commits",
-        DeltaLog.nextSeq(spark, s"$dir/commits"), "stats", fenceDomain = dir) { tmp =>
+    commit(spark, dir, "stats") { tmp =>
       rows.write.mode("overwrite").parquet(s"$tmp/stats")
     }
   }
 
-  private def partialRows(spark: SparkSession, dir: String): DataFrame = {
+  private def partialRows(spark: SparkSession, dir: String,
+      seqs: Seq[Int]): DataFrame = {
     val base = spark.read.parquet(DeltaLog.currentBase(spark, dir, "base"))
     // allowMissingColumns: a base written before the qtiles column (the
     // supported legacy layout) unions with qtiles-bearing commits — its
     // rows read null there, which folds correctly through the
     // isNotNull filter in mergedQuantileRows
-    DeltaLog.listSeqs(spark, s"$dir/commits", Some("stats"))
-      .map(s => spark.read.parquet(s"$dir/commits/$s/stats"))
+    seqs.map(leg(spark, dir, _, "stats"))
       .foldLeft(base)(_.unionByName(_, allowMissingColumns = true))
   }
 
@@ -209,7 +207,7 @@ object StatsStore {
     * HLL union estimate.
     */
   def profile(spark: SparkSession, dir: String): DataFrame =
-    partialRows(spark, dir)
+    partialRows(spark, dir, commitSeqs(spark, dir))
       .groupBy("col_name")
       .agg(
         sum("n_nonnull").as("n_nonnull"),
@@ -219,18 +217,10 @@ object StatsStore {
         coalesce(min("min_num").cast("string"), min("min_str")).as("min_v"),
         coalesce(max("max_num").cast("string"), max("max_str")).as("max_v"))
 
-  /** Fold the commit log into a fresh base — O(columns × log), a
-    * maintenance no-op at any corpus size. Installed via
-    * [[DeltaLog.installBase]] (in-place write + marker seal — no
-    * directory rename, object-store-safe). Maintenance contract (who
-    * may call, from where, `epoch`): [[VectorIndex.compact]].
-    */
-  def compact(spark: SparkSession, dir: String,
-      keepGenerations: Int = 1, epoch: WriterEpoch = null): Unit = {
-    val seqs = DeltaLog.listSeqs(spark, s"$dir/commits", Some("stats"))
-    if (seqs.isEmpty) return
-    val we = DeltaLog.resolveEpoch(spark, dir, epoch)
-    val rows = partialRows(spark, dir)
+  /** The compaction fold: the partials merged — O(columns × log). */
+  protected def fold(spark: SparkSession, dir: String,
+      seqs: Seq[Int]): String => Unit = {
+    val rows = partialRows(spark, dir, seqs)
     val folded = rows
       .groupBy("col_name")
       .agg(
@@ -245,14 +235,7 @@ object StatsStore {
       // the standard 99 points — numeric columns keep their percentile
       // view across compactions, string columns stay null
       .join(mergedQuantileRows(rows, QuantileProbs), Seq("col_name"), "left")
-    DeltaLog.installBase(spark, dir, "base", keepGenerations, fenceDomain = dir, epoch = we) { tmp =>
-      folded.coalesce(1).write.mode("overwrite").parquet(tmp)
-    }: Unit
-    // fenced since the install => never GC the folded log: a
-    // zombie compactor must not delete commits a rival's view holds
-    DeltaLog.checkFence(spark, we)
-    val f = DeltaLog.fs(spark, dir)
-    seqs.foreach(s => f.delete(new Path(s"$dir/commits/$s"), true))
+    tmp => folded.coalesce(1).write.mode("overwrite").parquet(tmp)
   }
 
   /** One-row health report: `(n_cols, n_pending_commits)` — commit depth
@@ -260,20 +243,9 @@ object StatsStore {
     * leg to every profile read).
     */
   def stats(spark: SparkSession, dir: String): DataFrame = {
-    val pending = DeltaLog.listSeqs(spark, s"$dir/commits", Some("stats")).length
+    val pending = commitSeqs(spark, dir).length
     spark.read.schema(metaSchema).parquet(s"$dir/meta")
       .agg(count(lit(1)).as("n_cols"))
       .select(col("n_cols"), lit(pending).cast("long").as("n_pending_commits"))
-  }
-
-  /** Compact iff the commit log is deeper than `maxDeltas` — the
-    * stats-driven auto-compaction policy, uniform with every other
-    * persisted store's hook. Returns whether a compaction ran.
-    */
-  def maybeCompact(spark: SparkSession, dir: String,
-      maxDeltas: Int = 8, keepGenerations: Int = 1): Boolean = {
-    val rec = DeltaLog.listSeqs(spark, s"$dir/commits", Some("stats")).length > maxDeltas
-    if (rec) compact(spark, dir, keepGenerations)
-    rec
   }
 }

@@ -1,6 +1,5 @@
 package graft.sink
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -47,7 +46,9 @@ import graft.operators.Ivf
   * degrades cell balance — [[stats]] measures it (skew vs uniform), and
   * rebuild (re-[[write]]) is the remedy.
   */
-object VectorIndex {
+object VectorIndex extends DepthGatedStore {
+
+  protected def baseName: String = "cells"
 
   private val metaSchema = StructType(Seq(
     StructField("id_col", StringType, nullable = false),
@@ -104,21 +105,16 @@ object VectorIndex {
     // (x_knn_indexed +14%, x_sim_ivf_stats +17%) — rationale at
     // GeoIndex.write.
     DeltaLog.inParallel(
-      () => spark.createDataFrame(
-          spark.sparkContext.parallelize(centroidRows.toSeq, 1), centroidSchema)
-        .write.mode("overwrite").parquet(s"$dir/centroids"),
-      () => spark.createDataFrame(
-          spark.sparkContext.parallelize(
-            Seq(Row(idCol, vecCol, model.centroids.head.length)), 1), metaSchema)
-        .write.mode("overwrite").parquet(s"$dir/meta"),
+      () => writeRows(spark, s"$dir/centroids", centroidSchema,
+        centroidRows.toSeq),
+      () => writeRows(spark, s"$dir/meta", metaSchema,
+        Seq(Row(idCol, vecCol, model.centroids.head.length))),
       () => DeltaLog.installBase(spark, dir, "cells", fenceDomain = dir) { tmp =>
         Ivf.assign(df.filter(col(vecCol).isNotNull), vecCol, model)
           .write.mode("overwrite").partitionBy("cell").parquet(tmp)
       }: Unit)
     writeRadii(spark, dir, vecCol)
-    // a rebuild starts a fresh history: everything live is in the base
-    DeltaLog.fs(spark, dir).delete(new Path(s"$dir/commits"), true)
-    DeltaLog.initRoot(spark, s"$dir/commits")
+    resetLog(spark, dir)
     // the rebuild replaced the contract + model: refresh the memos
     metaCache.put((spark, dir), Meta(idCol, vecCol, model.centroids.head.length))
     modelCache.put((spark, dir), model)
@@ -157,18 +153,7 @@ object VectorIndex {
       dir: String): Int = {
     val spark = df.sparkSession
     val m = checkMeta(spark, dir, idCol, vecCol)
-    // ONE aggregate action rejects BOTH commit-corrupting id shapes: a
-    // null id (invisible to the equality-keyed owner join — the row could
-    // never be superseded or deleted) and a duplicated id (two versions
-    // would both survive the one-owner-sequence-per-id filter)
-    val g = df.agg(count(lit(1)).as("n"),
-      count_distinct(col(idCol)).as("nd"),
-      count(when(col(idCol).isNull, 1)).as("nn")).head()
-    require(g.getLong(2) == 0 && g.getLong(0) == g.getLong(1),
-      s"upsert: batch carries a null or duplicated '$idCol' " +
-        s"(${g.getLong(0)} rows, ${g.getLong(1)} distinct non-null ids); " +
-        "a commit owns each non-null id once — dedupe last-writer-wins " +
-        "upstream")
+    requireUniqueKeys(df, idCol)
     val model = loadModel(spark, dir)
     // one file per O(batch) commit leg, cell-sorted for row-group
     // pruning: the batch inherits the source scan's partitioning (32
@@ -177,8 +162,7 @@ object VectorIndex {
     // SERVING cost, not just a write cost
     val assigned = Ivf.assign(checkedBatch(df, vecCol, m.dim), vecCol, model)
       .coalesce(1).sortWithinPartitions("cell")
-    DeltaLog.commit(spark, s"$dir/commits",
-        DeltaLog.nextSeq(spark, s"$dir/commits"), "docs", fenceDomain = dir) { tmp =>
+    commit(spark, dir) { tmp =>
       // r17: the two O(batch) legs are independent — concurrent jobs
       // (guide §2.6); the docs leg derives from `assigned`, not from the
       // raw df, because checkedBatch DROPS null-vector rows and a doc id
@@ -191,27 +175,15 @@ object VectorIndex {
   }
 
   /** Delete by key: the ids claim ownership with no vectors — a keyed
-    * tombstone, O(ids) bytes ([[IncrementalPostings.commitDeletes]]
-    * design). Returns the commit sequence.
+    * tombstone, O(ids) bytes ([[IncrementalStore.commitTombstones]]);
+    * null ids are dropped. Returns the commit sequence.
     */
   def delete(ids: DataFrame, idCol: String, dir: String): Int = {
     val spark = ids.sparkSession
     val m = readMeta(spark, dir)
     require(m.idCol == idCol,
       s"index at $dir is keyed by '${m.idCol}', not '$idCol'")
-    // an empty vectors file with the BASE's schema so resolution's
-    // unionByName sees every commit leg schema-complete
-    val baseSchema = spark.read
-      .parquet(DeltaLog.currentBase(spark, dir, "cells")).schema
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], baseSchema).repartition(1)
-    DeltaLog.commit(spark, s"$dir/commits",
-        DeltaLog.nextSeq(spark, s"$dir/commits"), "docs", fenceDomain = dir) { tmp =>
-      DeltaLog.inParallel( // independent legs → concurrent jobs (r17)
-        () => empty.write.mode("overwrite").parquet(s"$tmp/cells"),
-        () => ids.select(col(idCol)).distinct().coalesce(1)
-          .write.mode("overwrite").parquet(s"$tmp/docs"))
-    }
+    commitTombstones(spark, dir, ids.select(col(idCol)))
   }
 
   /** Insert-only alias kept for the ingestion shape where ids are known
@@ -234,9 +206,6 @@ object VectorIndex {
       require(rows.nonEmpty, s"no centroids at $d/centroids")
       Ivf.Model(rows.map(_.getSeq[Double](1).toArray))
     })
-
-  private def commitSeqs(spark: SparkSession, dir: String): Seq[Int] =
-    DeltaLog.listSeqs(spark, s"$dir/commits", Some("docs"))
 
   /** Per-cell max member-to-centroid ANGLE of the BASE layout — the
     * prune bound [[radiusSearch]] uses. Written at [[write]] and
@@ -267,7 +236,7 @@ object VectorIndex {
     * base leg is unaffected by resolution.
     */
   def cells(spark: SparkSession, dir: String): DataFrame =
-    cellsPruned(spark, dir, None)
+    cellsPruned(spark, dir, commitSeqs(spark, dir), None)
 
   /** [[cells]] with an optional partition filter applied to the BASE
     * leg ONLY: [[radiusSearch]]'s cell bound is proven over base
@@ -275,63 +244,29 @@ object VectorIndex {
     * always scan in full — an upserted vector landing outside its
     * cell's stored radius must still be found.
     */
-  private def cellsPruned(spark: SparkSession, dir: String,
+  private def cellsPruned(spark: SparkSession, dir: String, seqs: Seq[Int],
       baseCells: Option[Seq[Int]]): DataFrame = {
     val m = readMeta(spark, dir)
-    val seqs = commitSeqs(spark, dir)
     val base0 = spark.read.parquet(DeltaLog.currentBase(spark, dir, "cells"))
     val base = baseCells.fold(base0)(cs =>
       base0.filter(col("cell").isin(cs: _*)))
-    if (seqs.isEmpty) base
-    else {
-      val all = seqs.foldLeft(base.withColumn("_seq", lit(0))) { (acc, s) =>
-        acc.unionByName(spark.read.parquet(s"$dir/commits/$s/cells")
-          .withColumn("_seq", lit(s)))
-      }
-      val owners = seqs.map { s =>
-        spark.read.parquet(s"$dir/commits/$s/docs")
-          .select(col(m.idCol), lit(s).as("_live_seq"))
-      }.reduce(_.unionByName(_))
-        .groupBy(col(m.idCol)).agg(max("_live_seq").as("_live_seq"))
-      val cols = base.columns.map(col).toSeq
-      all.join(broadcast(owners), Seq(m.idCol), "left")
-        .filter(col("_seq") === coalesce(col("_live_seq"), lit(0)))
-        .select(cols: _*) // the join moved the id first; restore the layout
-    }
+    liveView(base, seqs, ownerTable(spark, dir, seqs, m.idCol), m.idCol)(
+      leg(spark, dir, _, "cells"))
   }
 
-  /** Fold all commits into a fresh cell-partitioned base — the only
-    * index-sized write, run as maintenance (same contract as
-    * [[IncrementalPostings.compact]]). Installed via
-    * [[DeltaLog.installBase]]: written in place, sealed by the marker —
-    * no directory rename, so an object-store reader never sees a
-    * partial base.
-    *
-    * MAINTENANCE CONTRACT (all five stores' compact, and
-    * [[ParquetIndexSink.vacuum]]): call from the owning writer's
-    * process (the session epoch is reused), or pass the owner's
-    * explicit [[WriterEpoch]] as `epoch`. Calling with no epoch from a
-    * SECOND JVM while the writer is live ACQUIRES a fresh claim and
-    * FENCES the live writer — that shape is a deliberate takeover
-    * (stop the writer first). See the README runbook.
+  /** The compaction fold: the live corpus, cell-partitioned. */
+  protected def fold(spark: SparkSession, dir: String,
+      seqs: Seq[Int]): String => Unit = {
+    val live = cellsPruned(spark, dir, seqs, None)
+    tmp => live.write.mode("overwrite").partitionBy("cell").parquet(tmp)
+  }
+
+  /** The folded base has new membership: tighten the radius bounds —
+    * behind its own fence check (radii is a plain overwrite a zombie
+    * could otherwise clobber after the rival took the store).
     */
-  def compact(spark: SparkSession, dir: String,
-      keepGenerations: Int = 1, epoch: WriterEpoch = null): Unit = {
-    val seqs = commitSeqs(spark, dir)
-    if (seqs.isEmpty) return
-    val we = DeltaLog.resolveEpoch(spark, dir, epoch)
-    val live = cells(spark, dir)
-    DeltaLog.installBase(spark, dir, "cells", keepGenerations, fenceDomain = dir, epoch = we) { tmp =>
-      live.write.mode("overwrite").partitionBy("cell").parquet(tmp)
-    }: Unit
-    // fenced since the install => never GC the folded log: a
-    // zombie compactor must not delete commits a rival's view holds
-    DeltaLog.checkFence(spark, we)
-    val f = DeltaLog.fs(spark, dir)
-    seqs.foreach(s => f.delete(new Path(s"$dir/commits/$s"), true))
-    // the folded base has new membership: tighten the radius bounds —
-    // behind its own fence check (radii is a plain overwrite a zombie
-    // could otherwise clobber after the rival took the store)
+  override protected def afterCompact(spark: SparkSession, dir: String,
+      we: WriterEpoch): Unit = {
     DeltaLog.checkFence(spark, we)
     writeRadii(spark, dir, readMeta(spark, dir).vecCol)
   }
@@ -400,7 +335,7 @@ object VectorIndex {
         }
     }.toSeq
     val qLit = array(q.map(lit).toIndexedSeq: _*)
-    cellsPruned(spark, dir, Some(probe))
+    cellsPruned(spark, dir, commitSeqs(spark, dir), Some(probe))
       .select(col(idCol),
         graft.functions.VectorExpressions.cosineFast(col(vecCol), qLit)
           .as("_c"))
@@ -517,20 +452,5 @@ object VectorIndex {
             round(col("max_cell") * lit(k) / col("n_vectors"), 4))
           .otherwise(lit(0.0)).as("skew"),
         lit(pending).cast("long").as("n_pending_commits"))
-  }
-
-  /** Compact iff the commit log is deeper than `maxDeltas` — the
-    * stats-driven auto-compaction policy an ingest loop calls after each
-    * upsert/delete, completing the shared mutation contract
-    * ([[IncrementalPostings.maybeCompact]] / `SignatureStore.maybeCompact`
-    * parity). Returns whether a compaction ran. Centroid DRIFT is the
-    * other rebuild signal and stays a [[stats]] judgement call (skew),
-    * because the remedy there is a re-[[write]], not a fold.
-    */
-  def maybeCompact(spark: SparkSession, dir: String,
-      maxDeltas: Int = 8, keepGenerations: Int = 1): Boolean = {
-    val rec = commitSeqs(spark, dir).length > maxDeltas
-    if (rec) compact(spark, dir, keepGenerations)
-    rec
   }
 }

@@ -1,5 +1,6 @@
 package graft.sink
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -337,5 +338,25 @@ class IncrementalPostingsSpec extends SparkSpec {
       IncrementalPostings.phraseSearch(spark, plain, "merge scan")
     }
     assert(e.getMessage.contains("withPositions"))
+  }
+
+  test("the file-per-split read session is memoized per parent, weakly") {
+    val parent = spark.newSession()
+    val derived = IncrementalPostings.filePerSplitSession(parent)
+    assert(IncrementalPostings.filePerSplitSession(parent) eq derived)
+    assert(derived ne parent)
+    // a parent no one else holds is collectable: the memo keys it weakly
+    // and the derived session keeps no reference back to it
+    def orphan(): java.lang.ref.WeakReference[SparkSession] = {
+      val p = spark.newSession()
+      IncrementalPostings.filePerSplitSession(p)
+      new java.lang.ref.WeakReference(p)
+    }
+    val ref = orphan()
+    var tries = 0
+    while (ref.get != null && tries < 50) {
+      System.gc(); Thread.sleep(50); tries += 1
+    }
+    assert(ref.get == null, "a dropped parent session stayed reachable")
   }
 }
